@@ -2,7 +2,7 @@
 """Volume rehearsal for the geometry family: a multi-million-piece
 distributed overlay (grid x irregular polygon layer, WKB pieces) followed
 by a strict per-polygon dissolve — the scale evidence for
-``grid_overlay_polygons_distributed`` / ``dissolve_pieces`` that the dedup
+``grid_overlay_polygons`` / ``dissolve_pieces`` that the dedup
 family got from ``scale_rehearsal.py``.
 
 The layers are synthesized IN Spark (no driver geometry):
@@ -185,7 +185,7 @@ def main() -> None:
 
         # ---- stage 1: distributed overlay -> WKB pieces --------------
         t0 = time.time()
-        pieces = OV.grid_overlay_polygons_distributed(
+        pieces = OV.grid_overlay_polygons(
             cells, polys, [], rule=None, emit_wkb=True
         )
         pieces_path = os.path.join(work, "pieces")

@@ -73,6 +73,24 @@ def decode_multipolygon(buf: bytes):
     return val
 
 
+def decode_cache(limit: int = 4096):
+    """Per-batch-iterator decode cache keyed by polygon id: returns
+    ``get(pid, buf)``, decoding each polygon once per Python worker
+    (bounded to ``limit`` entries). Shared by every candidate-pair loop
+    that sees the same polygon's WKB on many rows."""
+    cache: dict = {}
+
+    def get(pid, buf):
+        mp = cache.get(pid)
+        if mp is None:
+            mp = decode_multipolygon(bytes(buf))
+            if len(cache) < limit:
+                cache[pid] = mp
+        return mp
+
+    return get
+
+
 _EWKB_Z = 0x80000000
 _EWKB_M = 0x40000000
 _EWKB_SRID = 0x20000000

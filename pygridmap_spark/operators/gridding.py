@@ -174,15 +174,19 @@ def qtree_classify(polys, bbox, cellsize, max_level: int | None = None):
         cls = classify_rect(polys, bxmin, bymin, bxmax, bymax)
         if cls == ALL_OUT:
             continue
-        w, h = bxmax - bxmin, bymax - bymin
+        # whole cells spanned (a partial edge cell counts once past
+        # TOL_EPS): splitting on these integers, not on the float ratio,
+        # guarantees each child spans fewer cells even when the block edges
+        # are inexact multiples of the cell size
+        nx = math.ceil((bxmax - bxmin - B.TOL_EPS) / width)
+        ny = math.ceil((bymax - bymin - B.TOL_EPS) / height)
         if cls == ALL_IN:
             interior.append([bxmin, bymin, bxmax, bymax])
-        elif w <= width + B.TOL_EPS and h <= height + B.TOL_EPS:
+        elif nx <= 1 and ny <= 1:
             boundary.append([bxmin, bymin, bxmax, bymax])
         else:
-            mx = bxmin + math.ceil(w / width / 2) * width
-            my = bymin + math.ceil(h / height / 2) * height
-            mx, my = min(mx, bxmax), min(my, bymax)
+            mx = bxmin + math.ceil(nx / 2) * width if nx > 1 else bxmax
+            my = bymin + math.ceil(ny / 2) * height if ny > 1 else bymax
             for qx0, qy0, qx1, qy1 in (
                 (bxmin, bymin, mx, my),
                 (mx, bymin, bxmax, my),

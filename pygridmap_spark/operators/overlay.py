@@ -21,16 +21,16 @@ Two physical paths, chosen by the shape of the right side:
    DuckDB-oracle-checkable, which is how the driver verifies the engine.
 
 2. **rect x WKB polygons** (`grid_overlay_polygons`): irregular vector
-   layers (NUTS-3-style). Polygon side is a dimension table (broadcast);
-   candidates come from exploding each polygon's bbox into the grid's
-   integer cell-key range (the cell grid IS the spatial index — replaces
-   the reference's R-tree, overlay.py:257-260); the exact clip runs
-   vectorized-numpy in an Arrow UDF only on candidate pairs.
+   layers (NUTS-3-style), fully distributed — the polygon layer is never
+   collected to the driver, so it may outgrow it. Candidates come from
+   exploding each polygon's bbox into the grid's integer cell-key range
+   (the cell grid IS the spatial index — replaces the reference's R-tree,
+   overlay.py:257-260), equi-joined with the cells on that key; the exact
+   clip runs vectorized-numpy in an Arrow UDF only on candidate pairs.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -45,13 +45,6 @@ from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 
 RULES = ("sum", "max", "min", "list", None)
-
-
-def _box_wkb_udf():
-    """Shared rect-corners -> WKB encoder (see util.box_wkb_udf)."""
-    from pygridmap_spark.util import box_wkb_udf
-
-    return box_wkb_udf()
 
 
 def _check_emit_wkb(emit_wkb: bool, rule) -> None:
@@ -244,7 +237,7 @@ def grid_overlay_rects(
         # piece corners are closed-form; only the byte encoding needs Python
         # (Arrow-batched), and only when the caller asked for geometry
         extra = [
-            _box_wkb_udf()(
+            _util.box_wkb_udf()(
                 F.greatest("_ax", "_bx"),
                 F.greatest("_ay", "_by"),
                 F.least("_axm", "_bxm"),
@@ -270,7 +263,7 @@ def grid_overlay_rects(
                 ),
                 *columns,
                 *(
-                    [_box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")]
+                    [_util.box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")]
                     if emit_wkb
                     else []
                 ),
@@ -280,7 +273,7 @@ def grid_overlay_rects(
     out = _apply_rule(pieces, cells, columns, rule, cover, area)
     # inner semantics drop grid cells with no overlap (union keeps them
     # with null attrs — reference 'union' restricted to the grid frame)
-    return _drop_unmatched(out, columns, area, rule) if how == "intersection" else out.drop("__n_pieces__")
+    return _drop_unmatched(out) if how == "intersection" else out.drop("__n_pieces__")
 
 
 HOWS = ("intersection", "union", "union_full")
@@ -313,7 +306,7 @@ def _union_full_pieces(
     Anti-joins on the piece keys."""
     types = dict(pieces.dtypes)
     cell_geom = (
-        [_box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")] if emit_wkb else []
+        [_util.box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")] if emit_wkb else []
     )
     un_cells = cells.join(
         pieces.select("cell_id").distinct(), "cell_id", "left_anti"
@@ -338,7 +331,7 @@ def _union_full_pieces(
     return pieces.unionByName(un_cells).unionByName(un_polys)
 
 
-def _drop_unmatched(out: DataFrame, columns, area, rule) -> DataFrame:
+def _drop_unmatched(out: DataFrame) -> DataFrame:
     """Intersection semantics: keep only cells that genuinely overlapped —
     keyed on the piece-count marker, NOT attribute nullness (a cell whose
     only overlapping polygon carries a NULL attribute still overlaps)."""
@@ -346,12 +339,11 @@ def _drop_unmatched(out: DataFrame, columns, area, rule) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# path 2: rect x WKB polygons — broadcast + Arrow UDF exact clip
+# path 2: rect x WKB polygons — distributed cover join + Arrow UDF exact clip
 # ---------------------------------------------------------------------------
 
 
 def grid_overlay_polygons(
-    spark: SparkSession,
     cells: DataFrame,
     polygons: DataFrame,
     columns: Sequence[str],
@@ -365,11 +357,15 @@ def grid_overlay_polygons(
 ) -> DataFrame:
     """Overlay the cell grid with an irregular WKB polygon layer.
 
-    The polygon layer is collected + broadcast (dimension-table assumption —
-    same as the reference pickling the mask to every worker, but once per
-    executor instead of once per tile). Candidate pairs come from exploding
-    each polygon bbox into grid cell-key ranges; the exact Sutherland-
-    Hodgman clip runs only on candidates, vectorized per batch.
+    Fully distributed plan (no driver-side geometry, so the polygon layer
+    may be larger than the driver):
+    1. per-polygon bbox/area via one Arrow UDF pass (``_poly_meta``),
+    2. cover-cell explosion as JVM ``sequence``/``explode`` on the bbox —
+       ids + keys only, the WKB never rides the replication,
+    3. shuffled equi-join with the cells on the grid cell key (AQE handles
+       skew: a continent-sized polygon's cover cells split across tasks),
+       then the WKB joined back ONCE per polygon by id,
+    4. exact Sutherland-Hodgman clip on candidate pairs only.
 
     ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
     geometry (cell ∩ polygon, holes preserved) as WKB — the rings the clip
@@ -379,186 +375,10 @@ def grid_overlay_polygons(
     _check_emit_wkb(emit_wkb, rule)
     CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
     gx0, gy0, gw, gh = _grid_meta(cells, "grid cells")
-
-    rows = polygons.select(poly_key, geometry_col, *columns).collect()
-    geoms: dict[int, list] = {}
-    attr_rows = []
-    cand_rows = []
-    for r in rows:
-        mp = wkb.decode_multipolygon(bytes(r[geometry_col]))
-        if not mp or not any(len(p) for p in mp):
-            continue  # empty geometry: overlays nothing
-        pid = r[poly_key]
-        geoms[pid] = mp
-        parea = G.multipolygon_area(mp)
-        attr_rows.append((pid, parea, *[r[c] for c in columns]))
-        bxmin, bymin, bxmax, bymax = G.multipolygon_bbox(mp)
-        lo_x = int(math.floor((bxmin - gx0) / gw))
-        hi_x = int(math.floor((bxmax - 1e-12 - gx0) / gw))
-        lo_y = int(math.floor((bymin - gy0) / gh))
-        hi_y = int(math.floor((bymax - 1e-12 - gy0) / gh))
-        for ix in range(lo_x, hi_x + 1):
-            for iy in range(lo_y, hi_y + 1):
-                cand_rows.append((ix, iy, pid))
-
     key_type = dict(polygons.dtypes)[poly_key]
-    cand_df = spark.createDataFrame(
-        cand_rows, f"_gix long, _giy long, {poly_key} {key_type}"
-    )
-    attr_schema = f"{poly_key} {key_type}, poly_area double" + "".join(
-        f", {c} {dict(polygons.dtypes)[c]}" for c in columns
-    )
-    attr_df = spark.createDataFrame(attr_rows, attr_schema)
-
-    left = cells.select(
-        "cell_id",
-        F.floor((F.col("x") - F.lit(gx0)) / F.lit(gw)).cast("long").alias("_gix"),
-        F.floor((F.col("y") - F.lit(gy0)) / F.lit(gh)).cast("long").alias("_giy"),
-        F.col("x").alias("_ax"),
-        F.col("y").alias("_ay"),
-        F.col("xmax").alias("_axm"),
-        F.col("ymax").alias("_aym"),
-    )
-    pairs = left.join(F.broadcast(cand_df), ["_gix", "_giy"])
-
-    bcast = spark.sparkContext.broadcast(
-        {pid: [[np.asarray(r).tolist() for r in poly] for poly in mp] for pid, mp in geoms.items()}
-    )
-
-    def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, list] = {}
-
-        def get(pid):
-            if pid not in cache:
-                cache[pid] = [
-                    [np.asarray(r, dtype=np.float64) for r in poly]
-                    for poly in bcast.value[pid]
-                ]
-            return cache[pid]
-
-        for batch in batches:
-            if not len(batch):
-                continue
-            ax = batch["_ax"].to_numpy()
-            ay = batch["_ay"].to_numpy()
-            axm = batch["_axm"].to_numpy()
-            aym = batch["_aym"].to_numpy()
-            pids = batch[poly_key].to_numpy()
-            areas = np.empty(len(batch))
-            geoms_out = [None] * len(batch) if emit_wkb else None
-            for i in range(len(batch)):
-                if emit_wkb:
-                    mpc = G.multipolygon_clip(get(pids[i]), ax[i], ay[i], axm[i], aym[i])
-                    areas[i] = G.multipolygon_area(mpc)
-                    if mpc:
-                        geoms_out[i] = wkb.encode_multipolygon(mpc)
-                else:
-                    areas[i] = G.multipolygon_clip_area(
-                        get(pids[i]), ax[i], ay[i], axm[i], aym[i]
-                    )
-            out = batch[["cell_id", poly_key]].copy()
-            out["piece_area"] = areas
-            if emit_wkb:
-                out["geometry"] = pd.Series(geoms_out, index=batch.index, dtype=object)
-            yield out[out["piece_area"] > 0]
-
-    geom_field = ", geometry binary" if emit_wkb else ""
-    geom_cols = ["geometry"] if emit_wkb else []
-    pieces = pairs.mapInPandas(
-        _clip, f"cell_id long, {poly_key} {key_type}, piece_area double{geom_field}"
-    )
-    pieces = (
-        pieces.join(F.broadcast(attr_df), poly_key)
-        .withColumn(
-            "area_pct",
-            F.when(F.col("poly_area") > 0, F.col("piece_area") / F.col("poly_area")),
-        )
-        .select("cell_id", poly_key, "piece_area", "area_pct", *columns, *geom_cols)
-    )
-    if rule is None:
-        if how == "union_full":
-            psel = [poly_key, *columns]
-            if emit_wkb:
-                psel.append(F.col(geometry_col).alias("geometry"))
-            return _union_full_pieces(
-                pieces, cells, polygons.select(*psel), columns, poly_key, emit_wkb=emit_wkb
-            )
-        return pieces
-    out = _apply_rule(pieces, cells, columns, rule, cover, area, poly_key=poly_key)
-    if how == "intersection":
-        return _drop_unmatched(out, columns, area, rule)
-    return out.drop("__n_pieces__")
-
-
-def grid_overlay_polygons_distributed(
-    cells: DataFrame,
-    polygons: DataFrame,
-    columns: Sequence[str],
-    rule: str | None = "sum",
-    cover: bool = False,
-    area: bool = False,
-    how: str = "intersection",
-    geometry_col: str = "geometry",
-    poly_key: str = "poly_id",
-    emit_wkb: bool = False,
-) -> DataFrame:
-    """Overlay with a polygon layer too large to collect/broadcast.
-
-    Fully distributed plan (no driver-side geometry):
-    1. per-polygon bbox/area via one Arrow UDF pass (WKB decode batch-wise),
-    2. cover-cell explosion as JVM ``sequence``/``explode`` on the bbox —
-       ids + keys only, the WKB never rides the replication,
-    3. shuffled equi-join with the cells on the grid cell key (AQE handles
-       skew: a continent-sized polygon's cover cells split across tasks),
-       then the WKB joined back ONCE per polygon by id,
-    4. exact Sutherland-Hodgman clip on candidate pairs only.
-
-    Same semantics as :func:`grid_overlay_polygons` (pinned by tests),
-    including ``emit_wkb`` piece geometry.
-    """
-    _check_how(how, rule)
-    _check_emit_wkb(emit_wkb, rule)
-    CRS.check_layers_crs(
-        cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons_distributed"
-    )
-    spark = cells.sparkSession
-    gx0, gy0, gw, gh = _grid_meta(cells, "grid cells")
 
     # 1. bbox + area per polygon, decoded batch-at-a-time
-    key_type = dict(polygons.dtypes)[poly_key]
-    meta_schema = (
-        f"{poly_key} {key_type}, poly_area double, "
-        "__bxmin__ double, __bymin__ double, __bxmax__ double, __bymax__ double"
-    )
-
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            out = {
-                poly_key: batch[poly_key].to_numpy(),
-                "poly_area": np.empty(len(batch)),
-                "__bxmin__": np.empty(len(batch)),
-                "__bymin__": np.empty(len(batch)),
-                "__bxmax__": np.empty(len(batch)),
-                "__bymax__": np.empty(len(batch)),
-            }
-            keep_mask = np.ones(len(batch), dtype=bool)
-            for i, buf in enumerate(batch[geometry_col]):
-                mp = wkb.decode_multipolygon(bytes(buf))
-                if not mp or not any(len(p) for p in mp):
-                    keep_mask[i] = False  # empty geometry: overlays nothing
-                    continue
-                out["poly_area"][i] = G.multipolygon_area(mp)
-                (
-                    out["__bxmin__"][i],
-                    out["__bymin__"][i],
-                    out["__bxmax__"][i],
-                    out["__bymax__"][i],
-                ) = G.multipolygon_bbox(mp)
-            yield pd.DataFrame(out)[keep_mask]
-
-    meta = polygons.select(poly_key, geometry_col).mapInPandas(_meta, meta_schema)
+    meta = _poly_meta(polygons, poly_key, geometry_col, "poly_")
 
     # 2. cover-cell explosion (JVM) — ids + bbox-derived keys ONLY. The WKB
     # must not ride the x cover-cells replication into the cell-key
@@ -569,7 +389,7 @@ def grid_overlay_polygons_distributed(
     # never re-shuffled. Same re-plumb shape as the minhash LSH band fix.
     cover_df = _explode_cover(
         meta, gx0, gy0, gw, gh,
-        "__bxmin__", "__bymin__", "__bxmax__", "__bymax__",
+        "poly_xmin", "poly_ymin", "poly_xmax", "poly_ymax",
         keep=[poly_key, "poly_area"],
     )
 
@@ -591,7 +411,7 @@ def grid_overlay_polygons_distributed(
 
     # 3. exact clip on candidate pairs (decode cache keyed by poly id)
     def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_cache()
+        decode = wkb.decode_cache()
         for batch in batches:
             if not len(batch):
                 continue
@@ -652,28 +472,8 @@ def grid_overlay_polygons_distributed(
         return pieces
     out = _apply_rule(pieces, cells, columns, rule, cover, area, poly_key=poly_key)
     if how == "intersection":
-        return _drop_unmatched(out, columns, area, rule)
+        return _drop_unmatched(out)
     return out.drop("__n_pieces__")
-
-
-def _decode_cache(limit: int = 4096):
-    """Per-batch-iterator WKB decode cache keyed by polygon id — one
-    decode per polygon per Python worker, bounded. Shared by every
-    candidate-pair clip loop (distributed overlay, pair overlay,
-    distributed union)."""
-    from pygridmap_spark.core import wkb as _WKB
-
-    cache: dict = {}
-
-    def get(pid, buf):
-        mp = cache.get(pid)
-        if mp is None:
-            mp = _WKB.decode_multipolygon(bytes(buf))
-            if len(cache) < limit:
-                cache[pid] = mp
-        return mp
-
-    return get
 
 
 def _explode_cover(
@@ -783,7 +583,7 @@ def polygon_overlay_pieces(
     falls back to fragments on any area mismatch; identical areas and
     membership either way).
 
-    Fully distributed plan (same shape as grid_overlay_polygons_distributed):
+    Fully distributed plan (same shape as grid_overlay_polygons):
 
     1. one Arrow meta pass per side (bbox + area; WKB stays put),
     2. both sides explode their bbox cover cells on a SHARED index grid —
@@ -865,8 +665,8 @@ def polygon_overlay_pieces(
     )
 
     def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lcache = _decode_cache()
-        rcache = _decode_cache()
+        lcache = wkb.decode_cache()
+        rcache = wkb.decode_cache()
         # ear-clipping a concave polygon is O(n^2): memoized per polygon,
         # never re-paid per candidate pair
         wcache: dict = {}
@@ -942,18 +742,15 @@ def area_interpolate(
 ) -> DataFrame:
     """Tobler-style weighted areal interpolation (overlay.py:559-605):
     rule='sum', area & cover on, intersection semantics — each target cell
-    receives sum(attr * overlap_share_of_source). ``distributed=True``
-    routes through the no-broadcast overlay for source layers too large to
-    collect (identical output, pinned by the overlay parity tests)."""
-    kwargs = dict(
-        rule="sum", cover=True, area=True, how="intersection", geometry_col=geometry_col
-    )
-    if distributed:
-        return grid_overlay_polygons_distributed(
-            target_cells, source_polygons, columns, **kwargs
-        )
+    receives sum(attr * overlap_share_of_source), via the distributed
+    :func:`grid_overlay_polygons` plan.
+
+    ``spark`` and ``distributed`` are ignored: there is one plan, which
+    needs neither a session handle nor a choice. They stay in the signature
+    so existing positional and keyword callers keep working."""
     return grid_overlay_polygons(
-        spark, target_cells, source_polygons, columns, **kwargs
+        target_cells, source_polygons, columns,
+        rule="sum", cover=True, area=True, how="intersection", geometry_col=geometry_col,
     )
 
 
@@ -1142,7 +939,7 @@ def union_exact_distributed(
     )
 
     def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_cache()
+        decode = wkb.decode_cache()
         for batch in batches:
             if not len(batch):
                 continue

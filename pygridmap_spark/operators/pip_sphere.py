@@ -1,6 +1,6 @@
 """Geodesic point-in-polygon join over the S2 cell cover.
 
-The planar joins (operators/spatialjoin.py polygon_pip_join*) are exact
+The planar joins (operators/spatialjoin.py polygon_pip_join) are exact
 for coordinates already in a projected plane; web-scale page coordinates
 live on the sphere, where planar rect covers stop being containment-
 correct at high latitudes and across the antimeridian / cube edges. This

@@ -175,13 +175,14 @@ def zonal_stats(
     geometry_col: str = "geometry",
     poly_key: str = "poly_id",
     z: int = 7,
-    distributed: bool = False,
 ) -> DataFrame:
     """Per-polygon band statistics (count/sum/mean/min/max) — the classic
     raster->vector zonal aggregation. Cell membership is by CELL CENTER
     (standard zonal semantics): pixel centers run through the two-phase
-    polygon PIP join (interior cover cells assign with zero geometry work,
-    boundary pixels get the exact ray cast), then one groupBy(poly).
+    :func:`spatialjoin.polygon_pip_join` (interior cover cells assign with
+    zero geometry work, boundary pixels get the exact ray cast), then one
+    groupBy(poly). The polygon layer stays distributed: it is never
+    collected to the driver, whatever its size.
     Nodata pixels (null band) are excluded from the stats per band.
 
     ``height`` converts (col, row) to coords when the raster doesn't
@@ -239,19 +240,11 @@ def zonal_stats(
             "_cy": F.col("y") + F.lit(resolution / 2.0),
         }
     )
-    # bands are POINT-side columns: they flow through the PIP join as-is.
-    # distributed=True uses the no-collect PIP variant for polygon layers
-    # too large to broadcast (identical output, pinned by the PIP tests).
-    if distributed:
-        joined = SJ.polygon_pip_join_distributed(
-            centers, polygons, z=z, lon="_cx", lat="_cy",
-            geometry_col=geometry_col, poly_key=poly_key,
-        )
-    else:
-        joined = SJ.polygon_pip_join(
-            centers.sparkSession, centers, polygons, z=z, lon="_cx", lat="_cy",
-            geometry_col=geometry_col, poly_key=poly_key,
-        )
+    # bands are POINT-side columns: they flow through the PIP join as-is
+    joined = SJ.polygon_pip_join(
+        centers, polygons, z=z, lon="_cx", lat="_cy",
+        geometry_col=geometry_col, poly_key=poly_key,
+    )
     aggs = []
     for b in bands:
         aggs += [

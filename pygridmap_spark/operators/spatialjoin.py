@@ -2,20 +2,17 @@
 (SURVEY §2.4 J1/J2 re-expressed as indexed equi-joins).
 
 Design principle: **the cell grid is the spatial index**. Regions are
-expanded to the integer cells their bboxes cover (JVM `sequence`/`explode`,
-distributed); points carry the same cell key; the join is a broadcast hash
-equi-join on (cell_ix, cell_iy) — never a nested-loop scan. The exact
-phase is then:
+expanded to the integer cells their bboxes cover (distributed); points
+carry the same cell key; the join is a hash equi-join on
+(cell_ix, cell_iy) — never a nested-loop scan. The exact phase is then:
 
-- rects: a residual range predicate (pure Catalyst, codegen),
-- WKB polygons: two-phase — cover cells classified ALL_IN / BOUNDARY
-  driver-side by exact clip area (the reference's coarse short-circuit,
-  gridding.py:146-151); only points in BOUNDARY cells run the vectorized
-  numpy ray-cast (gridding.py:180-182's J2), via one Arrow-batched UDF.
-
-At 10^12 pages the points side never shuffles: the region side is a
-dimension table (countries/NUTS ~10^3-10^5 rows) whose cover-cell explosion
-stays broadcastable at a suitably coarse zoom.
+- rects: a residual range predicate (pure Catalyst, codegen) behind a
+  broadcast of the rect cover cells,
+- WKB polygons: two-phase — cover cells classified ALL_IN / BOUNDARY by
+  exact clip area in an Arrow pass over the polygon rows (the reference's
+  coarse short-circuit, gridding.py:146-151); only points in BOUNDARY
+  cells run the vectorized numpy ray-cast (gridding.py:180-182's J2), via
+  one Arrow-batched UDF. The polygon layer never goes through the driver.
 """
 
 from __future__ import annotations
@@ -25,7 +22,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pygridmap_spark.core import geometry as G
@@ -43,9 +40,7 @@ def _point_cell_exprs(lon: str, lat: str, z: int):
 
 
 def _cover_cell_range(bxmin, bymin, bxmax, bymax, z: int):
-    """Integer cover-cell ranges of a bbox at zoom z (clamped). One shared
-    implementation for both polygon-PIP variants — the two must stay
-    byte-identical for their pinned output parity."""
+    """Integer cover-cell ranges of a bbox at zoom z (clamped)."""
     n = 1 << z
     clamp = lambda v: min(max(v, 0), n - 1)  # noqa: E731
     lo_x = clamp(int(math.floor((bxmin + 180.0) / 360.0 * n)))
@@ -117,88 +112,6 @@ def rect_pip_join(
 
 
 def polygon_pip_join(
-    spark: SparkSession,
-    points: DataFrame,
-    polygons: DataFrame,
-    z: int = 7,
-    lon: str = "lon",
-    lat: str = "lat",
-    geometry_col: str = "geometry",
-    poly_key: str = "poly_id",
-    keep_cols: tuple = (),
-) -> DataFrame:
-    """Points x WKB polygon layer (two-phase exact PIP).
-
-    Driver classifies each polygon's cover cells once (clip-area exact);
-    ALL_IN cells assign their points with zero geometry work, BOUNDARY
-    cells run the vectorized even-odd ray cast on candidate points only.
-    """
-    n = 1 << z
-    rows = polygons.select(poly_key, geometry_col, *keep_cols).collect()
-    geoms: dict[int, list] = {}
-    cover_rows = []
-    for r in rows:
-        mp = wkb.decode_multipolygon(bytes(r[geometry_col]))
-        if not mp or not any(len(p) for p in mp):
-            continue  # empty geometry: matches nothing
-        pid = r[poly_key]
-        geoms[pid] = mp
-        lo_x, hi_x, lo_y, hi_y = _cover_cell_range(*G.multipolygon_bbox(mp), z)
-        for cix in range(lo_x, hi_x + 1):
-            for ciy in range(lo_y, hi_y + 1):
-                cls = classify_rect(mp, *_cell_rect(cix, ciy, z))
-                if cls != ALL_OUT:
-                    cover_rows.append((cix, ciy, pid, cls))
-    key_type = dict(polygons.dtypes)[poly_key]
-    cover = spark.createDataFrame(
-        cover_rows, f"__cix__ long, __ciy__ long, {poly_key} {key_type}, __cls__ int"
-    )
-    cix, ciy = _point_cell_exprs(lon, lat, z)
-    pts = points.withColumns({"__cix__": cix, "__ciy__": ciy})
-    cand = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
-    interior = cand.filter(F.col("__cls__") == ALL_IN)
-
-    boundary = cand.filter(F.col("__cls__") == BOUNDARY)
-    bcast = spark.sparkContext.broadcast(
-        {pid: [[np.asarray(ring).tolist() for ring in poly] for poly in mp] for pid, mp in geoms.items()}
-    )
-    schema = boundary.schema
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, list] = {}
-
-        def get(pid):
-            if pid not in cache:
-                cache[pid] = [
-                    [np.asarray(r, dtype=np.float64) for r in poly]
-                    for poly in bcast.value[pid]
-                ]
-            return cache[pid]
-
-        for batch in batches:
-            if not len(batch):
-                continue
-            keep = np.zeros(len(batch), dtype=bool)
-            px = batch[lon].to_numpy(dtype=np.float64)
-            py = batch[lat].to_numpy(dtype=np.float64)
-            # group by polygon id -> one vectorized ray-cast per polygon
-            pids = batch[poly_key].to_numpy()
-            for pid in np.unique(pids):
-                sel = pids == pid
-                keep[sel] = G.points_in_multipolygon(px[sel], py[sel], get(pid))
-            yield batch[keep]
-
-    exact = boundary.mapInPandas(_exact, schema)
-    out = interior.unionByName(exact).drop("__cix__", "__ciy__", "__cls__")
-    if keep_cols:
-        # polygon attribute pass-through (joined back by key — the cover
-        # table stays narrow for the broadcast)
-        attrs = polygons.select(poly_key, *keep_cols)
-        out = out.join(F.broadcast(attrs), poly_key, "left")
-    return out
-
-
-def polygon_pip_join_distributed(
     points: DataFrame,
     polygons: DataFrame,
     z: int = 7,
@@ -207,8 +120,8 @@ def polygon_pip_join_distributed(
     geometry_col: str = "geometry",
     poly_key: str = "poly_id",
 ) -> DataFrame:
-    """Points x WKB polygons when the polygon layer itself is too large to
-    collect (e.g. parcel-level layers). Fully distributed two-phase plan:
+    """Points x WKB polygon layer (two-phase exact PIP), fully
+    distributed — the polygon layer is never collected to the driver:
 
     1. one Arrow pass over polygons emits (cover cell, class) rows — the
        classification clip runs where the polygon row lives; the WKB does
@@ -220,9 +133,9 @@ def polygon_pip_join_distributed(
        once through that exchange) and run the vectorized ray cast,
        decoding once per polygon per batch.
 
-    Same output as :func:`polygon_pip_join` (pinned by tests).
+    Returns the point rows joined with ``poly_key`` (inner: points in no
+    polygon are dropped).
     """
-    n = 1 << z
 
     def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -258,7 +171,7 @@ def polygon_pip_join_distributed(
     schema = interior.schema
 
     def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
+        decode = wkb.decode_cache()
         for batch in batches:
             if not len(batch):
                 continue
@@ -268,11 +181,7 @@ def polygon_pip_join_distributed(
             keep = np.zeros(len(batch), dtype=bool)
             for pid in np.unique(pids):
                 sel = np.nonzero(pids == pid)[0]
-                mp = cache.get(pid)
-                if mp is None:
-                    mp = wkb.decode_multipolygon(bytes(batch["__wkb__"].iloc[sel[0]]))
-                    if len(cache) < 4096:
-                        cache[pid] = mp
+                mp = decode(pid, batch["__wkb__"].iloc[sel[0]])
                 keep[sel] = G.points_in_multipolygon(px[sel], py[sel], mp)
             yield batch[keep].drop(columns=["__wkb__"])
 

@@ -141,6 +141,29 @@ def test_qtree_mode_matches_prll_mode(spark):
     assert p2 == q2
 
 
+def test_qtree_terminates_on_inexact_cell_edges(spark, monkeypatch):
+    """120 cells over 100 km: block edges are inexact float multiples of
+    the cell size, and the mask edges are not cell-aligned. The quadtree
+    must still shrink every block it splits (bounded classify_rect calls)
+    and emit exactly the prll grid."""
+    calls = [0]
+    classify = GR.classify_rect
+
+    def bounded(*args, **kwargs):
+        calls[0] += 1
+        assert calls[0] < 100_000, "qtree_classify is not shrinking its blocks"
+        return classify(*args, **kwargs)
+
+    monkeypatch.setattr(GR, "classify_rect", bounded)
+    mask = rect_mask(spark, 23_000.0, 31_000.0, 68_500.0, 79_500.0)
+    c = 100_000.0 / 120
+    kw = dict(mask=mask, cell=(c, c), bbox=BBOX, trim=True)
+    key = ["cell_x", "cell_y", "__intersects__", "__within__"]
+    qtree = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="qtree", **kw).collect()}
+    prll = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="prll", **kw).collect()}
+    assert qtree == prll and len(qtree) > 0
+
+
 def test_qtree_requires_trim(spark):
     polys_df = PG.synthetic_polygons(spark, n=2, bbox=BBOX, seed=1)
     with pytest.raises(ValueError):

@@ -160,13 +160,13 @@ def test_reprojected_overlay_parity(spark):
     poly_4326 = RP.reproject(poly_3035, to=4326)
     assert CRS.crs_of(poly_4326) == "EPSG:4326"
     got = sorted(
-        r.pid for r in SJ.polygon_pip_join(spark, pts, poly_4326).collect()
+        r.pid for r in SJ.polygon_pip_join(pts, poly_4326).collect()
     )
     # same-CRS fixture: the polygon authored in 4326 directly
     fixture = spark.createDataFrame(
         [(1, WKB.encode_polygon([ring]))], "poly_id long, geometry binary"
     )
-    want = sorted(r.pid for r in SJ.polygon_pip_join(spark, pts, fixture).collect())
+    want = sorted(r.pid for r in SJ.polygon_pip_join(pts, fixture).collect())
     assert got == want and len(want) > 0
 
 

@@ -112,17 +112,15 @@ def test_empty_multipolygon_rows_are_skipped(spark):
     )
     polys = spark.createDataFrame(pdf)
     grid = PG.grid_layer(spark, (0.0, 0.0, 100_000.0, 100_000.0), (50_000.0, 50_000.0))
-    out = OV.grid_overlay_polygons(spark, grid, polys, ["pop"], rule=None).collect()
+    out = OV.grid_overlay_polygons(grid, polys, ["pop"], rule=None).collect()
     assert {r["poly_id"] for r in out} == {0}
-    out2 = OV.grid_overlay_polygons_distributed(grid, polys, ["pop"], rule=None).collect()
-    assert {r["poly_id"] for r in out2} == {0}
     with pytest.raises(ValueError):
         G.multipolygon_bbox([])
 
 
 def test_overlay_custom_poly_key_and_rule_max(spark):
-    """poly_key forwarding: non-default key name works through every rule
-    path in both polygon variants."""
+    """poly_key forwarding: a non-default key name works through the
+    max (window) and list (collect) rule paths."""
     pdf = pd.DataFrame(
         {
             "region_code": [7, 9],
@@ -137,9 +135,9 @@ def test_overlay_custom_poly_key_and_rule_max(spark):
     grid = PG.grid_layer(spark, (0.0, 0.0, 100_000.0, 100_000.0), (50_000.0, 50_000.0))
     for fn in (
         lambda: OV.grid_overlay_polygons(
-            spark, grid, polys, ["pop"], rule="max", area=True, poly_key="region_code"
+            grid, polys, ["pop"], rule="max", area=True, poly_key="region_code"
         ),
-        lambda: OV.grid_overlay_polygons_distributed(
+        lambda: OV.grid_overlay_polygons(
             grid, polys, ["pop"], rule="list", poly_key="region_code"
         ),
     ):

@@ -68,22 +68,10 @@ def _expected_pip(points, polys_rows):
 def test_polygon_pip_join_matches_numpy(spark, points_df, geo_polygons):
     got = {
         (r["pid"], r["poly_id"])
-        for r in SJ.polygon_pip_join(spark, points_df, geo_polygons, z=6).collect()
+        for r in SJ.polygon_pip_join(points_df, geo_polygons, z=6).collect()
     }
     want = _expected_pip(points_df.collect(), geo_polygons.collect())
     assert got == want and len(want) > 0
-
-
-def test_polygon_pip_join_distributed_parity(spark, points_df, geo_polygons):
-    bcast = {
-        (r["pid"], r["poly_id"])
-        for r in SJ.polygon_pip_join(spark, points_df, geo_polygons, z=6).collect()
-    }
-    dist = {
-        (r["pid"], r["poly_id"])
-        for r in SJ.polygon_pip_join_distributed(points_df, geo_polygons, z=6).collect()
-    }
-    assert bcast == dist
 
 
 def test_bbox_union_intersection_aggs(spark):
