@@ -107,6 +107,8 @@ def minhash_signatures(
     higher-order expressions (a pure-Catalyst formulation with
     transform/array_min lambdas measured ~25s for 5.7k docs). Docs with no
     shingles drop out (can't be near-dup candidates)."""
+    if num_hashes <= 0:
+        raise ValueError(f"num_hashes must be positive, got {num_hashes}")
     return _shingle_kernel_frame(df, id_col, text_col, shingle_n, num_hashes)
 
 
@@ -121,7 +123,8 @@ def shingle_hash_sets(
     pass. Set operations over these 64-bit hashes equal the same
     operations over the shingle strings up to collisions (the minhash
     contract). Docs with fewer than ``shingle_n`` tokens drop (empty
-    shingle set — they can neither contain nor be contained)."""
+    shingle set — they can neither contain nor be contained). NULL text
+    has no tokens, so a NULL-text doc always drops."""
     return _shingle_kernel_frame(df, id_col, text_col, shingle_n, None)
 
 
@@ -136,7 +139,7 @@ def _shingle_kernel_frame(
     import zlib
     from typing import Iterator
 
-    seeds = _mh_seeds(num_hashes)[:, None] if num_hashes else None  # (k, 1)
+    seeds = _mh_seeds(num_hashes)[:, None] if num_hashes is not None else None  # (k, 1)
     norm_re = _re.compile(r"[^a-z0-9]+")
     # odd position multipliers so shingle hashes are order-sensitive
     pos_mult = [
@@ -153,7 +156,9 @@ def _shingle_kernel_frame(
             # round-3 per-token Python dict loop was the interpreter-bound
             # part of this kernel
             tok_lists, ids = [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col].astype(str)):
+            for doc_id, text in zip(batch[id_col], batch[text_col]):
+                # NULL text is the empty string (no tokens), never "None"
+                text = "" if text is None else str(text)
                 toks = norm_re.sub(" ", text.lower()).split()
                 if len(toks) - shingle_n + 1 < 1:
                     continue
@@ -213,7 +218,7 @@ def _shingle_kernel_frame(
             )
 
     id_type = _sql_type(df, id_col)
-    sig_part = "signature array<long>, " if num_hashes else ""
+    sig_part = "signature array<long>, " if num_hashes is not None else ""
     return df.select(id_col, text_col).mapInPandas(
         _kernel, f"{id_col} {id_type}, {sig_part}shingles array<long>"
     )

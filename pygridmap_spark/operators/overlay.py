@@ -338,78 +338,78 @@ def _drop_unmatched(out: DataFrame) -> DataFrame:
     return out.filter(F.col("__n_pieces__").isNotNull()).drop("__n_pieces__")
 
 
-# ---------------------------------------------------------------------------
-# path 2: rect x WKB polygons — distributed cover join + Arrow UDF exact clip
-# ---------------------------------------------------------------------------
+def _sql_double(v: float) -> str:
+    """``v`` as an exact Spark SQL DOUBLE literal (a bare ``1.5`` parses
+    as DECIMAL)."""
+    return f"{float(v)!r}D"
 
 
-def grid_overlay_polygons(
-    cells: DataFrame,
+def _clip_pairs(
+    rects: DataFrame,
+    rect_id: str,
     polygons: DataFrame,
-    columns: Sequence[str],
-    rule: str | None = "sum",
-    cover: bool = False,
-    area: bool = False,
-    how: str = "intersection",
-    geometry_col: str = "geometry",
-    poly_key: str = "poly_id",
+    poly_key: str,
+    geometry_col: str,
+    grid: tuple[float, float, float, float],
     emit_wkb: bool = False,
+    extent: Sequence[float] | None = None,
 ) -> DataFrame:
-    """Overlay the cell grid with an irregular WKB polygon layer.
+    """The rect x WKB-polygon join shared by :func:`grid_overlay_polygons`
+    and ``gridding.grid_maker``: every (rect, polygon) pair whose clip
+    area is > 0, as ``(rect_id, poly_key, poly_area, piece_area
+    [, geometry])``.
 
-    Fully distributed plan (no driver-side geometry, so the polygon layer
-    may be larger than the driver):
-    1. per-polygon bbox/area via one Arrow UDF pass (``_poly_meta``),
-    2. cover-cell explosion as JVM ``sequence``/``explode`` on the bbox —
-       ids + keys only, the WKB never rides the replication,
-    3. shuffled equi-join with the cells on the grid cell key (AQE handles
-       skew: a continent-sized polygon's cover cells split across tasks),
-       then the WKB joined back ONCE per polygon by id,
-    4. exact Sutherland-Hodgman clip on candidate pairs only.
+    ``rects`` carries ``rect_id, x, y, xmax, ymax``, each rect one cell of
+    the index grid ``grid = (x0, y0, w, h)`` (keyed by its centre, so a
+    float-inexact corner never lands on the neighbour key). ``extent``
+    clamps the polygon bboxes before the cover explosion, so a polygon
+    far larger than the rect layer only explodes over keys that exist.
 
-    ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
-    geometry (cell ∩ polygon, holes preserved) as WKB — the rings the clip
-    kernel computes anyway, encoded instead of discarded after the area.
+    1. bbox + area per polygon, decoded batch-at-a-time (``_poly_meta``),
+    2. cover-cell explosion (JVM) — ids + bbox-derived keys ONLY. The WKB
+       must not ride the x cover-cells replication into the key exchange
+       (a country polygon with 100k vertices and 10^4 cover cells would
+       ship 10^4 copies),
+    3. shuffled equi-join with the rects on the key (AQE splits a
+       mega-polygon's skewed pair partition), then the WKB joined back by
+       poly key AFTER the pair join, so the exchange carries each geometry
+       once and the per-pair duplication happens inside the clip stage,
+    4. exact Sutherland-Hodgman clip on candidate pairs only (decode cache
+       keyed by poly key).
     """
-    _check_how(how, rule)
-    _check_emit_wkb(emit_wkb, rule)
-    CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
-    gx0, gy0, gw, gh = _grid_meta(cells, "grid cells")
+    rid_type = dict(rects.dtypes)[rect_id]
     key_type = dict(polygons.dtypes)[poly_key]
-
-    # 1. bbox + area per polygon, decoded batch-at-a-time
     meta = _poly_meta(polygons, poly_key, geometry_col, "poly_")
-
-    # 2. cover-cell explosion (JVM) — ids + bbox-derived keys ONLY. The WKB
-    # must not ride the x cover-cells replication into the cell-key
-    # exchange (a country polygon with 100k vertices and 10^4 cover cells
-    # would ship 10^4 copies); it is joined back by poly id AFTER the pair
-    # join, so the exchange carries each geometry once (hash-partitioned by
-    # key) and the per-pair duplication happens inside the clip stage,
-    # never re-shuffled. Same re-plumb shape as the minhash LSH band fix.
+    if extent is not None:
+        ex0, ey0, ex1, ey1 = (_sql_double(v) for v in extent)
+        meta = meta.selectExpr(
+            f"`{poly_key}`",
+            "poly_area",
+            f"greatest(poly_xmin, {ex0}) AS poly_xmin",
+            f"greatest(poly_ymin, {ey0}) AS poly_ymin",
+            f"least(poly_xmax, {ex1}) AS poly_xmax",
+            f"least(poly_ymax, {ey1}) AS poly_ymax",
+        ).filter("poly_xmin < poly_xmax AND poly_ymin < poly_ymax")
     cover_df = _explode_cover(
-        meta, gx0, gy0, gw, gh,
-        "poly_xmin", "poly_ymin", "poly_xmax", "poly_ymax",
+        meta, *grid, "poly_xmin", "poly_ymin", "poly_xmax", "poly_ymax",
         keep=[poly_key, "poly_area"],
     )
-
-    left = cells.select(
-        "cell_id",
-        F.floor((F.col("x") - F.lit(gx0)) / F.lit(gw)).cast("long").alias("_gix"),
-        F.floor((F.col("y") - F.lit(gy0)) / F.lit(gh)).cast("long").alias("_giy"),
-        F.col("x").alias("_ax"),
-        F.col("y").alias("_ay"),
-        F.col("xmax").alias("_axm"),
-        F.col("ymax").alias("_aym"),
+    x0, y0, w, h = (_sql_double(v) for v in grid)
+    left = rects.selectExpr(
+        f"`{rect_id}`",
+        f"floor(((x + xmax) * 0.5D - {x0}) / {w}) AS _gix",
+        f"floor(((y + ymax) * 0.5D - {y0}) / {h}) AS _giy",
+        "x AS _ax",
+        "y AS _ay",
+        "xmax AS _axm",
+        "ymax AS _aym",
     )
-    # raw WKB fetched once per polygon (no meta recompute — the pair join
-    # only contains keys that survived the meta pass, so empty geometries
-    # stay excluded). AQE splits a mega-polygon's skewed pair partition.
+    # the pair join only contains keys that survived the meta pass, so
+    # empty geometries stay excluded
     pairs = left.join(cover_df, ["_gix", "_giy"]).join(
         polygons.select(poly_key, F.col(geometry_col).alias("__wkb__")), poly_key
     )
 
-    # 3. exact clip on candidate pairs (decode cache keyed by poly id)
     def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         decode = wkb.decode_cache()
         for batch in batches:
@@ -432,17 +432,57 @@ def grid_overlay_polygons(
                         geoms_out[i] = wkb.encode_multipolygon(mpc)
                 else:
                     areas[i] = G.multipolygon_clip_area(mp, ax[i], ay[i], axm[i], aym[i])
-            out = batch[["cell_id", poly_key, "poly_area"]].copy()
+            out = batch[[rect_id, poly_key, "poly_area"]].copy()
             out["piece_area"] = areas
             if emit_wkb:
                 out["geometry"] = pd.Series(geoms_out, index=batch.index, dtype=object)
             yield out[out["piece_area"] > 0]
 
     geom_field = ", geometry binary" if emit_wkb else ""
-    geom_cols = ["geometry"] if emit_wkb else []
-    pieces = pairs.mapInPandas(
+    return pairs.mapInPandas(
         _clip,
-        f"cell_id long, {poly_key} {key_type}, poly_area double, piece_area double{geom_field}",
+        f"{rect_id} {rid_type}, {poly_key} {key_type}, poly_area double, piece_area double{geom_field}",
+    )
+
+
+# ---------------------------------------------------------------------------
+# path 2: rect x WKB polygons — distributed cover join + Arrow UDF exact clip
+# ---------------------------------------------------------------------------
+
+
+def grid_overlay_polygons(
+    cells: DataFrame,
+    polygons: DataFrame,
+    columns: Sequence[str],
+    rule: str | None = "sum",
+    cover: bool = False,
+    area: bool = False,
+    how: str = "intersection",
+    geometry_col: str = "geometry",
+    poly_key: str = "poly_id",
+    emit_wkb: bool = False,
+) -> DataFrame:
+    """Overlay the cell grid with an irregular WKB polygon layer.
+
+    Fully distributed plan (no driver-side geometry, so the polygon layer
+    may be larger than the driver): the cells' own grid (``_grid_meta``)
+    is the spatial index of :func:`_clip_pairs` — per-polygon bbox/area,
+    cover-cell explosion, shuffled equi-join on the cell key, WKB joined
+    back once per polygon, exact clip on candidate pairs only. The same
+    join computes ``gridding.grid_maker``'s tile classes and per-cell mask
+    flags.
+
+    ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
+    geometry (cell ∩ polygon, holes preserved) as WKB — the rings the clip
+    kernel computes anyway, encoded instead of discarded after the area.
+    """
+    _check_how(how, rule)
+    _check_emit_wkb(emit_wkb, rule)
+    CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
+    geom_cols = ["geometry"] if emit_wkb else []
+    pieces = _clip_pairs(
+        cells, "cell_id", polygons, poly_key, geometry_col,
+        _grid_meta(cells, "grid cells"), emit_wkb=emit_wkb,
     )
     # attribute merge-back ONLY when attributes were asked for: with no
     # columns the join adds nothing (every piece key came from the polygon
@@ -493,27 +533,20 @@ def _explode_cover(
     """bbox -> covered-cell key explosion (ids + keys only; geometry never
     rides the replication). The eps keeps a bbox edge exactly on a cell
     line from claiming the next cell."""
-    eps = 1e-12
-    step1 = df.select(
+    x0, y0, w, h, eps = (_sql_double(v) for v in (x0, y0, w, h, 1e-12))
+    keep = [f"`{c}`" for c in keep]
+    step1 = df.selectExpr(
         *keep,
-        F.explode(
-            F.sequence(
-                F.floor((F.col(xmin) - F.lit(x0)) / F.lit(w)).cast("long"),
-                F.floor((F.col(xmax) - F.lit(eps) - F.lit(x0)) / F.lit(w)).cast("long"),
-            )
-        ).alias(out_x),
-        F.col(ymin).alias("__cy0__"),
-        F.col(ymax).alias("__cy1__"),
+        f"explode(sequence(floor((`{xmin}` - {x0}) / {w}), "
+        f"floor((`{xmax}` - {eps} - {x0}) / {w}))) AS `{out_x}`",
+        f"`{ymin}` AS __cy0__",
+        f"`{ymax}` AS __cy1__",
     )
-    return step1.select(
+    return step1.selectExpr(
         *keep,
-        out_x,
-        F.explode(
-            F.sequence(
-                F.floor((F.col("__cy0__") - F.lit(y0)) / F.lit(h)).cast("long"),
-                F.floor((F.col("__cy1__") - F.lit(eps) - F.lit(y0)) / F.lit(h)).cast("long"),
-            )
-        ).alias(out_y),
+        f"`{out_x}`",
+        f"explode(sequence(floor((__cy0__ - {y0}) / {h}), "
+        f"floor((__cy1__ - {eps} - {y0}) / {h}))) AS `{out_y}`",
     )
 
 

@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Driver heap for this host: half of physical RAM (``total_bytes``,
+    read from the OS when None), at least 1g and at most 24g. A fixed 24g
+    heap on a 15 GB host lets the driver JVM grow until the OS kills it."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, total_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app: str = "pygridmap_spark",
     master: str | None = None,
@@ -36,7 +45,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

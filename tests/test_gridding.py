@@ -6,8 +6,11 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from pygridmap_spark.core import bboxes as B
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 from pygridmap_spark.operators import gridding as GR
@@ -187,37 +190,93 @@ def test_frame_map_and_row_apply(spark):
     assert ga.count() == 4
 
 
-def test_distributed_tile_classification_matches_driver(spark, monkeypatch):
-    """Past DRIVER_TILE_LIMIT, grid_maker's phase A runs distributed; the
-    END-TO-END output must match the driver-loop path cell for cell
-    (cutover forced by monkeypatching the module constant)."""
-    import pandas as pd
+def _bruteforce_flags(geoms, bbox, cell):
+    """Per-cell oracle: every cell of the grid against every mask geometry
+    with the exact clip, OR-reduced per geometry (gridding.py:180-182)."""
+    height, width = cell
+    x0, y0 = bbox[0], bbox[1]
+    nrows, ncols = B.get_grid_shape([height, width], bbox)
+    cell_area = height * width
+    flags = {}
+    for cx in range(ncols):
+        for cy in range(nrows):
+            x, y = x0 + cx * width, y0 + cy * height
+            areas = [G.multipolygon_clip_area(g, x, y, x + width, y + height) for g in geoms]
+            flags[(cx, cy)] = (
+                any(a > 1e-9 * cell_area for a in areas),
+                any(a >= cell_area * (1 - 1e-9) for a in areas),
+            )
+    return flags
 
-    import pygridmap_spark.operators.gridding as gr_mod
-    from pygridmap_spark.core import wkb
 
-    pdf = pd.DataFrame(
-        {
-            "poly_id": [0, 1],
-            "geometry": [
-                wkb.encode_box(15_000.0, 15_000.0, 70_000.0, 55_000.0),
-                wkb.encode_box(60_000.0, 60_000.0, 95_000.0, 95_000.0),
-            ],
-        }
-    )
-    mask = spark.createDataFrame(pdf)
-    kwargs = dict(
-        mask=mask, cell=(5_000.0, 5_000.0), bbox=(0.0, 0.0, 100_000.0, 100_000.0),
-        tile=[4, 4], trim=False,
-    )
-    driver = {
+def _flags(df):
+    return {
         (r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"])
-        for r in GR.grid_maker(spark, **kwargs).collect()
+        for r in df.collect()
     }
-    monkeypatch.setattr(gr_mod, "DRIVER_TILE_LIMIT", 0)  # force distributed
-    dist = {
-        (r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"])
-        for r in GR.grid_maker(spark, **kwargs).collect()
-    }
-    assert len(driver) == 400
-    assert dist == driver
+
+
+def test_tile_classification_matches_bruteforce(spark):
+    """400 cells in 4x4-cell tiles, two boxes: the tile classes and the
+    per-cell exact phase reproduce the brute-force per-cell flags."""
+    boxes = [
+        (15_000.0, 15_000.0, 70_000.0, 55_000.0),
+        (60_000.0, 60_000.0, 95_000.0, 95_000.0),
+    ]
+    pdf = pd.DataFrame({"poly_id": [0, 1], "geometry": [wkb.encode_box(*b) for b in boxes]})
+    cell = (5_000.0, 5_000.0)
+    out = _flags(
+        GR.grid_maker(
+            spark, mask=spark.createDataFrame(pdf), cell=cell, bbox=BBOX, tile=[4, 4], trim=False
+        )
+    )
+    geoms = [wkb.decode_multipolygon(wkb.encode_box(*b)) for b in boxes]
+    assert len(out) == 400
+    assert out == _bruteforce_flags(geoms, BBOX, cell)
+
+
+def test_sliver_overlap_survives_tile_and_block_classification(spark):
+    """A mask overlapping cell (0, 0) by 0.5 m^2 (above the 1e-9 per-cell
+    tolerance of a 1 km cell) must flag that cell, although the overlap is
+    below 1e-9 of the 32 km tile / quadtree block holding it: the coarse
+    levels classify at the per-cell tolerance."""
+    mask = rect_mask(spark, -500.0, -500.0, 0.5, 1.0)
+    kw = dict(mask=mask, cell=(1_000.0, 1_000.0), bbox=(0.0, 0.0, 32_000.0, 32_000.0))
+    for mode in ("prll", "qtree"):
+        rows = GR.grid_maker(spark, mode=mode, trim=True, **kw).collect()
+        assert [(r["cell_x"], r["cell_y"]) for r in rows] == [(0, 0)], mode
+    flags = _flags(GR.grid_maker(spark, trim=False, **kw))
+    assert flags[(0, 0)] == (True, False)
+    assert sum(i for i, _ in flags.values()) == 1
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    seed=st.integers(0, 10_000),
+    n=st.integers(1, 3),
+    tile=st.integers(2, 4),
+    box=st.tuples(
+        st.floats(1_000.0, 6_000.0), st.floats(1_000.0, 6_000.0),
+        st.floats(9_000.0, 13_000.0), st.floats(9_000.0, 13_000.0),
+    ),
+)
+def test_prll_qtree_bruteforce_agree_on_inexact_grids(spark, seed, n, tile, box):
+    """prll == qtree == brute force on a grid whose cell size (100 km /
+    120) is an inexact float, under random polygons plus a box large
+    enough that the small tiles see all-in, all-out and boundary
+    classes."""
+    bbox = (0.0, 0.0, 25_000.0, 25_000.0)
+    c = 100_000.0 / 120
+    polys = PG.synthetic_polygons(spark, n=n, bbox=bbox, seed=seed)
+    bx0, by0, w, h = box
+    mask = polys.select("geometry").unionByName(
+        spark.createDataFrame(pd.DataFrame({"geometry": [wkb.encode_box(bx0, by0, bx0 + w, by0 + h)]}))
+    )
+    geoms = [wkb.decode_multipolygon(bytes(r["geometry"])) for r in mask.collect()]
+    kw = dict(mask=mask, cell=(c, c), bbox=bbox, tile=[tile, tile])
+    oracle = _bruteforce_flags(geoms, B.align_bbox([c, c], bbox), (c, c))
+    assert any(wi for _, wi in oracle.values()) and not all(i for i, _ in oracle.values())
+    assert _flags(GR.grid_maker(spark, trim=False, **kw)) == oracle
+    hit = {k: v for k, v in oracle.items() if v[0]}
+    assert _flags(GR.grid_maker(spark, trim=True, **kw)) == hit
+    assert _flags(GR.grid_maker(spark, trim=True, mode="qtree", **kw)) == hit

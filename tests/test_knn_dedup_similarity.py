@@ -376,3 +376,22 @@ class TestShingleContainment:
             df, containment_threshold=0.1, max_shingle_freq=5
         )
         assert full.count() == 15 and capped.count() == 0
+
+
+def test_shingle_sets_treat_null_text_as_empty(spark):
+    """NULL text has no tokens: it drops out instead of becoming the token
+    'none' and pairing with docs that contain that word."""
+    df = spark.createDataFrame(
+        [(0, None), (1, "none"), (2, "none of these")], "doc_id long, text string"
+    )
+    sets = {r["doc_id"]: set(r["shingles"]) for r in DD.shingle_hash_sets(df, shingle_n=1).collect()}
+    assert set(sets) == {1, 2}
+    assert sets[1] <= sets[2]
+
+
+def test_minhash_signatures_rejects_nonpositive_num_hashes(spark):
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    for k in (0, -3):
+        with pytest.raises(ValueError):
+            DD.minhash_signatures(df, num_hashes=k)
+    assert len(DD.minhash_signatures(df, num_hashes=1).collect()[0]["signature"]) == 1
